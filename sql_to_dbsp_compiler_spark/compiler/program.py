@@ -39,6 +39,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -5326,16 +5327,30 @@ class IncrementalProgram:
     """Maintain a program's views under input Z-set deltas.
 
     Semantics (the reference's incremental-circuit specification):
-    each ``step`` integrates the input deltas into per-table state,
-    evaluates every view on the new multiset snapshot, and returns
-    per-view output *deltas* — Z-sets whose integral always equals
-    the view evaluated on the integrated inputs. Scale note: state
-    snapshots are cached DataFrames partitioned by Spark; per-step
-    cost is a re-evaluation over state (naive incremental). For the
-    truly incremental per-operator path see plans/zset.py
-    (incremental_join, aggregate_linear) and streaming/ (Structured
-    Streaming state store), which this class intentionally does not
-    duplicate.
+    each ``step`` integrates the input deltas into per-table state and
+    returns per-view output *deltas* — Z-sets whose integral always
+    equals the view evaluated on the integrated inputs.
+
+    Paths (``plan()`` names the one each view takes): with
+    ``optimize=True`` a recognized view compiles to per-operator
+    incremental circuits (plans/incremental.py: linear maps, bilinear
+    joins, aggregates over their own keyed state, distinct, ...) that
+    turn the input deltas into the output delta at a cost of about
+    |Δ| plus the state rows the delta touches. Any other view takes
+    the naive D∘Q∘I path: re-evaluate it over the integrated inputs
+    and diff against its previous value, O(state) per step; recursive
+    views run a warm-started / counting / DRed fixpoint.
+
+    View integrals are lazy. A step appends each incremental view's
+    output delta to a pending list instead of re-consolidating the
+    whole view; ``snapshot(view)`` folds the pending deltas into the
+    stored integral (one consolidation plus a lazy local checkpoint),
+    so it may launch Spark jobs. Every ``checkpoint_every`` steps,
+    ``step`` folds all views and checkpoints the table state, which
+    bounds the retained deltas and their lineage; that step pays for
+    re-running the pending deltas' plans. Programs with a
+    naive or recursive view fold every step, because those views read
+    their source views' integrals through ``snapshot``.
     """
 
     def __init__(
@@ -5361,8 +5376,11 @@ class IncrementalProgram:
             name: ZSet.from_df(_empty_table(spark, t))
             for name, t in self.program.tables.items()
         }
-        # Integrated state of each view, as a Z-set (starts empty).
+        # Integrated state of each view, as a Z-set (starts empty),
+        # and each incremental view's output deltas not yet folded
+        # into it (see snapshot()).
         self._view_state: dict[str, ZSet] = {}
+        self._pending: dict[str, list[ZSet]] = {}
         self._steps = 0
         self._checkpoint_every = checkpoint_every
         # observability: # of steps where a recursive view warm-started
@@ -5934,25 +5952,36 @@ class IncrementalProgram:
                 # store the recomputed snapshot directly (cheaper than
                 # prev + d, and identical by construction)
                 self._view_state[view.name] = snap
-                if self._has_naive:
-                    snap.to_multiset_df().createOrReplaceTempView(view.name)
-                out[view.name] = d
-                continue
-
-            prev = self._view_state.get(view.name)
-            integ = d if prev is None else prev.add(d).consolidate()
-            self._view_state[view.name] = ZSet(integ.df.localCheckpoint(eager=False))
+            if op is not None:
+                # the integral I(d) is folded lazily by snapshot(): no
+                # per-step consolidation over the whole view
+                self._pending.setdefault(view.name, []).append(d)
             if self._has_naive:
                 # downstream naive views may read this view's snapshot
-                integ.to_multiset_df().createOrReplaceTempView(view.name)
+                self.snapshot(view.name).to_multiset_df().createOrReplaceTempView(view.name)
             out[view.name] = d
+        if self._steps % self._checkpoint_every == 0:
+            # bound the retained deltas and their lineage
+            for name in list(self._pending):
+                self.snapshot(name)
         # hidden CTE views are circuit internals, not program outputs
         return {n: z for n, z in out.items() if n not in self._hidden}
 
     def snapshot(self, view: str) -> ZSet:
-        """Current integrated value of a view (Z-set)."""
+        """Current integrated value of a view (Z-set). Folds the output
+        deltas of the steps since the last fold into the stored
+        integral, so a call after steps that left deltas pending
+        launches Spark jobs: one consolidation over the view, which
+        re-runs the pending deltas' plans."""
+        if view not in self._ops:
+            raise KeyError(f"unknown view: {view}")
+        pending = self._pending.pop(view, None)
+        if pending:
+            prev = self._view_state.get(view)
+            integ = reduce(ZSet.add, pending if prev is None else [prev, *pending])
+            self._view_state[view] = ZSet(integ.consolidate().df.localCheckpoint(eager=False))
         if view not in self._view_state:
-            raise ValueError("no steps applied yet")
+            raise ValueError(f"no steps applied yet to view {view}")
         return self._view_state[view]
 
     def step_statements(self, text: str) -> dict[str, ZSet]:
@@ -6078,6 +6107,12 @@ class IncrementalProgram:
         inc._steps = manifest["steps"] + 1
         return inc
 
+    def _source_z(self, name: str) -> ZSet:
+        """Integrated state of a table or (folded) view."""
+        if name in self.program.tables:
+            return self._state[name]
+        return self.snapshot(name)
+
     def _warm_recursive(self, view: ViewDef, in_deltas: dict, out: dict):
         """Warm-start evaluation of a recursive view for this step, or
         None when the safe preconditions don't hold.
@@ -6094,6 +6129,8 @@ class IncrementalProgram:
         (other sources see their new full snapshots). Every first
         derivation of a new fact uses ≥1 changed-source delta row, so
         the seed is complete; distinct∘subtract keeps it sound."""
+        # a recursive view makes the program fold every view every
+        # step, so _view_state holds every integral, never stale
         prev = self._view_state.get(view.name)
         if prev is None:
             return None
@@ -6160,11 +6197,6 @@ class IncrementalProgram:
         T = prev.to_multiset_df().localCheckpoint(eager=False)
         cols = T.columns
 
-        def snapshot_df(s: str) -> DataFrame:
-            if s in self.program.tables:
-                return self._state[s].to_multiset_df()
-            return self._view_state[s].to_multiset_df()
-
         seeds: list[DataFrame] = []
         T.createOrReplaceTempView(view.name)
         for p in base_parts:
@@ -6177,7 +6209,7 @@ class IncrementalProgram:
                 try:
                     seeds.append(spark.sql(p).toDF(*cols))
                 finally:
-                    snapshot_df(s).createOrReplaceTempView(s)
+                    self._source_z(s).to_multiset_df().createOrReplaceTempView(s)
         seed = seeds[0]
         for sdf in seeds[1:]:
             seed = seed.unionByName(sdf)
@@ -6236,23 +6268,18 @@ class IncrementalProgram:
         or None on divergence."""
         spark = self.spark
         name = view.name
-        cols = [c for c in self._view_state[name].df.columns if c != WEIGHT]
+        cols = [c for c in self.snapshot(name).df.columns if c != WEIGHT]
         all_srcs = {s for p in base_parts + rec_parts for s in refs(p)}
 
-        def state_z(s: str) -> ZSet:
-            if s in self.program.tables:
-                return self._state[s]
-            return self._view_state[s]
-
         NEW = {
-            s: state_z(s).to_multiset_df().localCheckpoint(eager=False)
+            s: self._source_z(s).to_multiset_df().localCheckpoint(eager=False)
             for s in all_srcs
         }
         OLD = {
             s: (
-                state_z(s).add(changed[s].neg()).consolidate()
+                self._source_z(s).add(changed[s].neg()).consolidate()
                 if s in changed
-                else state_z(s)
+                else self._source_z(s)
             )
             .to_multiset_df()
             .localCheckpoint(eager=False)
@@ -6441,11 +6468,6 @@ class IncrementalProgram:
         cols = T.columns
         all_srcs = {s for p in base_parts + rec_parts for s in refs(p)}
 
-        def state_z(s: str) -> ZSet:
-            if s in self.program.tables:
-                return self._state[s]
-            return self._view_state[s]
-
         def signed_rows(s: str, sign: int) -> "DataFrame | None":
             """Deleted (sign<0) / inserted rows of s as a positive
             multiset, or None when that side is empty — built once per
@@ -6466,14 +6488,14 @@ class IncrementalProgram:
         # snapshots feed every round of every phase — checkpoint so the
         # consolidate+explode subtrees run once, not per Spark job
         NEW = {
-            s: state_z(s).to_multiset_df().localCheckpoint(eager=False)
+            s: self._source_z(s).to_multiset_df().localCheckpoint(eager=False)
             for s in all_srcs
         }
         OLD = {
             s: (
-                state_z(s).add(changed[s].neg()).consolidate()
+                self._source_z(s).add(changed[s].neg()).consolidate()
                 if s in changed
-                else state_z(s)
+                else self._source_z(s)
             )
             .to_multiset_df()
             .localCheckpoint(eager=False)

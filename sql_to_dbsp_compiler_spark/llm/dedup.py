@@ -450,9 +450,10 @@ def hamming_filtered_bucket_pairs(
         # return null, the hamming sum would go null, and the
         # `<= max_hamming` filter would silently drop EVERY pair
         # (recall collapses to zero with no error). Fail loudly instead.
+        # Every signature in the bucket is checked: widths may differ.
         buckets = buckets.where(
             F.assert_true(
-                F.size(F.element_at("xs", 1)["s"]) >= nwords,
+                F.forall("xs", lambda x: F.size(x["s"]) >= nwords),
                 F.lit(
                     f"hamming_filtered_bucket_pairs: signature narrower "
                     f"than nwords={nwords} words"

@@ -13,6 +13,8 @@ hence bit-deterministic and identical to DuckDB's list functions).
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -146,7 +148,15 @@ def ivf_assign_to(
         # text spells the exact aggregate(zip_with(...)) fold dot()
         # builds, so the parsed tree and every emitted value are
         # unchanged (pinned by test_assign_in_row_argmax_matches_
-        # aggregate and the oracle sweep).
+        # aggregate and the oracle sweep). repr() of NaN/Inf is no SQL
+        # literal: reject such centroids here, by id, rather than fail
+        # as a parse error.
+        for r in rows:
+            if not all(math.isfinite(v) for v in r["cvec"]):
+                raise ValueError(
+                    f"ivf_assign_to: centroid {r['centroid_id']} has a non-finite value"
+                )
+
         def _d(x: float) -> str:
             return repr(float(x)) + "D"
 

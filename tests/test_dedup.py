@@ -646,3 +646,24 @@ def test_span_excise_keep_first_and_stitching(spark, tmp_path):
     assert out[1].clean_text == "foxtrot golf hotel india juliet kilo"
     assert out[2].removed_tokens == 0 and out[3].removed_tokens == 0
     assert out[4].removed_tokens == 0 and out[4].clean_text == docs[4][1]
+
+
+def test_hamming_bucket_pairs_width_guard_checks_every_signature(spark):
+    """The nwords width guard must look at every signature in a bucket,
+    not only the first: a narrower signature later in the bucket would
+    make the unrolled popcount null and silently drop its pairs."""
+    import pytest
+
+    from sql_to_dbsp_compiler_spark.llm.dedup import hamming_filtered_bucket_pairs
+
+    schema = "id bigint, b int, sig array<bigint>"
+    ok = spark.createDataFrame([(1, 0, [5, 7]), (2, 0, [5, 7])], schema)
+    got = hamming_filtered_bucket_pairs(ok, ["b"], "id", "sig", max_hamming=0, nwords=2)
+    assert [tuple(r) for r in got.collect()] == [(1, 2)]
+
+    # id 1 sorts first in the bucket and is wide enough; id 2 is not
+    narrow = spark.createDataFrame([(1, 0, [5, 7]), (2, 0, [5])], schema)
+    with pytest.raises(Exception, match="narrower than nwords=2"):
+        hamming_filtered_bucket_pairs(
+            narrow, ["b"], "id", "sig", max_hamming=0, nwords=2
+        ).collect()

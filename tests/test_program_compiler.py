@@ -3540,3 +3540,162 @@ def test_dedup_statement_sequence_native_replay(spark):
     con.execute("DELETE FROM docs WHERE doc_id IN (1, 100)")
     check("delete2")
     con.close()
+
+
+# One view per incremental kind the lazy integral has to fold: linear,
+# aggregate (over a view), join, distinct.
+FOLD_PROGRAM = """
+CREATE TABLE o(o_k INTEGER, o_ck INTEGER, o_st VARCHAR, o_amt INTEGER);
+CREATE TABLE c(c_ck INTEGER, c_seg VARCHAR);
+CREATE VIEW v_lin AS SELECT o_k, o_ck, o_amt FROM o WHERE o_st = 'O';
+CREATE VIEW v_agg AS SELECT o_ck, SUM(o_amt) AS s, COUNT(*) AS n FROM v_lin GROUP BY o_ck;
+CREATE VIEW v_join AS SELECT o.o_k, o.o_amt, c.c_ck, c.c_seg FROM o JOIN c ON o.o_ck = c.c_ck;
+CREATE VIEW v_dist AS SELECT DISTINCT o_st FROM o;
+"""
+FOLD_SCHEMAS = {
+    "o": "o_k int, o_ck int, o_st string, o_amt int, __weight long",
+    "c": "c_ck int, c_seg string, __weight long",
+}
+# five steps of mixed inserts and retractions (weights in the last field)
+FOLD_STEPS = [
+    {
+        "o": [(1, 10, "O", 5, 1), (2, 10, "O", 7, 1), (3, 20, "F", 9, 1), (4, 20, "O", 1, 1)],
+        "c": [(10, "auto", 1), (20, "build", 1)],
+    },
+    {"o": [(2, 10, "O", 7, -1), (5, 30, "O", 4, 1)], "c": [(30, "auto", 1)]},
+    {"o": [(6, 10, "P", 2, 2)], "c": [(20, "build", -1), (20, "house", 1)]},
+    {"o": [(1, 10, "O", 5, -1), (3, 20, "F", 9, -1), (7, 20, "O", 8, 1)]},
+    {"o": [(6, 10, "P", 2, -1), (8, 30, "F", 3, 1)], "c": [(10, "auto", -1)]},
+]
+
+
+def _weighted(z: ZSet) -> dict[tuple, int]:
+    """A Z-set as {payload row: summed weight}, zero weights dropped."""
+    from collections import Counter
+
+    payload = [c for c in z.df.columns if c != "__weight"]
+    acc: Counter = Counter()
+    for r in z.df.select(*payload, "__weight").collect():
+        acc[tuple(r)[:-1]] += r["__weight"]
+    return {k: w for k, w in acc.items() if w}
+
+
+def _fold_deltas(spark, step: dict) -> dict[str, ZSet]:
+    return {t: ZSet(spark.createDataFrame(rows, FOLD_SCHEMAS[t])) for t, rows in step.items()}
+
+
+def _step_and_integrate(spark, inc, step: dict, integral: dict) -> None:
+    for v, d in inc.step(_fold_deltas(spark, step)).items():
+        acc = integral.setdefault(v, {})
+        for row, w in _weighted(d).items():
+            acc[row] = acc.get(row, 0) + w
+            if not acc[row]:
+                del acc[row]
+
+
+@pytest.mark.slow
+def test_lazy_view_integral_folds_across_checkpoint(spark, tmp_path):
+    """snapshot() folds each view's pending output deltas on demand and
+    step() folds them all every checkpoint_every steps: either way the
+    snapshot equals the sum of the deltas step() returned — mid-cycle,
+    at the fold step, after further steps, and after save_state /
+    restore."""
+    inc = IncrementalProgram(spark, FOLD_PROGRAM, optimize=True, checkpoint_every=2)
+    assert inc.plan() == {
+        "v_lin": "linear",
+        "v_agg": "aggregate",
+        "v_join": "join",
+        "v_dist": "distinct",
+    }
+    integral: dict[str, dict] = {}
+
+    def check(prog) -> None:
+        for v, want in integral.items():
+            assert _weighted(prog.snapshot(v)) == want, v
+
+    for i, step in enumerate(FOLD_STEPS, start=1):
+        _step_and_integrate(spark, inc, step, integral)
+        if i % 2 == 0:
+            # the fold step leaves nothing pending
+            assert not inc._pending
+        # step 1 stays pending so that step 2 folds two deltas; step 4
+        # is a fold step like step 2
+        if i in (2, 3, 5):
+            check(inc)
+
+    state = str(tmp_path / "state")
+    inc.save_state(state)
+    restored = IncrementalProgram.restore(
+        spark, FOLD_PROGRAM, state, optimize=True, checkpoint_every=2
+    )
+    check(restored)
+
+
+@pytest.mark.slow
+def test_naive_view_over_lazy_integrals_matches_batch(spark):
+    """Naive views read their incremental source views' integrals as
+    temp views, folded through snapshot() every step: the integrated
+    deltas and the snapshot of every view still match the batch SQL
+    over the integrated inputs, row for row."""
+    from collections import Counter
+
+    prog = FOLD_PROGRAM + """
+    CREATE VIEW v_big AS SELECT o_k, o_amt FROM v_lin WHERE o_amt > (SELECT AVG(o_amt) FROM v_lin);
+    CREATE VIEW v_top AS SELECT o_ck, s FROM v_agg WHERE s = (SELECT MAX(s) FROM v_agg);
+    """
+    inc = IncrementalProgram(spark, prog, optimize=True, checkpoint_every=2)
+    kinds = inc.plan()
+    assert kinds["v_big"] == kinds["v_top"] == "naive"
+    assert kinds["v_lin"] == "linear" and kinds["v_agg"] == "aggregate"
+
+    integral: dict[str, dict] = {}
+    inputs = {t: ZSet(spark.createDataFrame([], schema)) for t, schema in FOLD_SCHEMAS.items()}
+    for step in FOLD_STEPS:
+        _step_and_integrate(spark, inc, step, integral)
+        for t, d in _fold_deltas(spark, step).items():
+            inputs[t] = inputs[t].add(d)
+    batch = compile_batch(
+        spark, prog, sources={t: z.consolidate().to_multiset_df() for t, z in inputs.items()}
+    )
+    for v, df in batch.items():
+        want = dict(Counter(tuple(r) for r in df.collect()))
+        assert integral[v] == want, v
+        assert _weighted(inc.snapshot(v)) == want, v
+
+
+def test_snapshot_unknown_view_raises_key_error(spark):
+    inc = IncrementalProgram(spark, FOLD_PROGRAM, optimize=True)
+    with pytest.raises(ValueError, match="no steps applied yet"):
+        inc.snapshot("v_lin")
+    for name in ("nope", "o"):  # not a view; a table is not a view either
+        with pytest.raises(KeyError, match=f"unknown view: {name}"):
+            inc.snapshot(name)
+    inc.step(_fold_deltas(spark, FOLD_STEPS[0]))
+    with pytest.raises(KeyError, match="unknown view: nope"):
+        inc.snapshot("nope")
+    assert _weighted(inc.snapshot("v_dist")) == {("O",): 1, ("F",): 1}
+
+
+def test_linear_step_launches_no_spark_jobs(spark):
+    """A step of linear views only composes delta plans: their
+    integrals are folded lazily, so a non-checkpoint step launches no
+    Spark job. Re-materializing an integral per step would."""
+    prog = """
+    CREATE TABLE o(o_k INTEGER, o_ck INTEGER, o_st VARCHAR, o_amt INTEGER);
+    CREATE VIEW v_open AS SELECT o_k, o_amt FROM o WHERE o_st = 'O';
+    CREATE VIEW v_big AS SELECT o_k, o_ck FROM o WHERE o_amt > 4;
+    """
+    inc = IncrementalProgram(spark, prog, optimize=True, checkpoint_every=8)
+    assert set(inc.plan().values()) == {"linear"}
+    inc.step(_fold_deltas(spark, {"o": FOLD_STEPS[0]["o"]}))
+    deltas = _fold_deltas(spark, {"o": FOLD_STEPS[1]["o"]})
+    sc = spark.sparkContext
+    group = "test_linear_step_launches_no_spark_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        out = inc.step(deltas)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert _weighted(out["v_open"]) == {(2, 7): -1, (5, 4): 1}

@@ -761,3 +761,22 @@ def test_assign_in_row_argmax_matches_aggregate(spark):
     }
     assert got == ref
     assert got[2] == 1  # exact tie between centroids 1 and 2 -> lowest id
+
+
+def test_assign_in_row_rejects_non_finite_centroid(spark):
+    """NaN/Inf centroid values have no SQL literal form: the in-row
+    argmax must reject them with an error naming the centroid, not an
+    opaque parse error."""
+    import pytest
+
+    from sql_to_dbsp_compiler_spark.llm.similarity import ivf_assign_to
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "vec_id bigint, embedding array<double>"
+    )
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        cent = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (7, [bad, 1.0])], "centroid_id int, cvec array<double>"
+        )
+        with pytest.raises(ValueError, match="centroid 7 has a non-finite value"):
+            ivf_assign_to(corpus, cent)
